@@ -320,6 +320,11 @@ def _load_evidence() -> dict:
         competing = sum(1 for pid in spark_pids if pid not in mine)
     except OSError:
         competing = -1
+    # null when unset or not an integer: no core count is known then
+    try:
+        cpus_requested = int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        cpus_requested = None
     return {
         "loadavg": [la1, la5, la15],
         # host cpu count (the settle/contended math runs on this) — the
@@ -328,7 +333,7 @@ def _load_evidence() -> dict:
         # artifact couldn't prove the 8-cpu run used 8 cpus, so the
         # driver's scaling probe false-flagged suspect_cpus_ignored).
         "cpus": os.cpu_count() or -1,
-        "cpus_requested": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus_requested": cpus_requested,
         "competing_spark_pids": competing,
     }
 

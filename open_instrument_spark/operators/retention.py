@@ -23,10 +23,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from open_instrument_spark.functions.durations import parse_duration_ms
 from open_instrument_spark.functions.match import VariableMatcher
 from open_instrument_spark.operators import mutate as _mutate
+from open_instrument_spark.session import local_df
 
 
 @dataclass(frozen=True)
@@ -109,6 +111,32 @@ def apply_retention(points: DataFrame, policy: list[PolicyItem], now) -> DataFra
     return result
 
 
+def _report_input(points: DataFrame, policy: list[PolicyItem], now) -> DataFrame:
+    """Per row: its first-match ``policy_idx``, that item's ``action``
+    and the series key ``_sk`` — what :func:`retention_report` and
+    :func:`retention_report_and_totals` aggregate."""
+    idx = policy_index(points, policy, now)
+    action = F.lit("default_drop")
+    for i in range(len(policy) - 1, -1, -1):
+        item = policy[i]
+        a = ("downsample" if item.keep and item.mutations
+             else "keep" if item.keep else "drop")
+        action = F.when(F.col("policy_idx") == i, a).otherwise(action)
+    from open_instrument_spark.model import SERIES_KEY_COL, series_key
+
+    # precomputed key reused when the frame carries one (r15 staged path)
+    key = (F.col(SERIES_KEY_COL) if SERIES_KEY_COL in points.columns
+           else series_key())
+    return (points.select(idx.alias("policy_idx"), key.alias("_sk"))
+            .withColumn("action", action))
+
+
+def _report_aggregates() -> list[Column]:
+    """The report's per-band measures over :func:`_report_input`."""
+    return [F.count(F.lit(1)).alias("n_samples"),
+            F.countDistinct("_sk").alias("n_series")]
+
+
 def retention_report(points: DataFrame, policy: list[PolicyItem], now) -> DataFrame:
     """DRY-RUN audit of a policy — what an operator checks BEFORE
     letting the job rewrite 100 TB of store: per first-match policy
@@ -118,28 +146,37 @@ def retention_report(points: DataFrame, policy: list[PolicyItem], now) -> DataFr
     uses, so the report can never disagree with the rewrite. Output:
     (policy_idx, action ∈ keep|downsample|drop|default_drop, n_samples,
     n_series), ordered by policy_idx."""
-    tagged = points.withColumn("_policy", policy_index(points, policy, now))
-    action = F.lit("default_drop")
-    for i in range(len(policy) - 1, -1, -1):
-        item = policy[i]
-        a = ("downsample" if item.keep and item.mutations
-             else "keep" if item.keep else "drop")
-        action = F.when(F.col("_policy") == i, a).otherwise(action)
-    from open_instrument_spark.model import SERIES_KEY_COL, series_key
-
-    # precomputed key reused when the frame carries one (r15 staged path)
-    key = (F.col(SERIES_KEY_COL) if SERIES_KEY_COL in points.columns
-           else series_key())
     return (
-        tagged.withColumn("_action", action)
-        .withColumn("_sk", key)
-        .groupBy(F.col("_policy").alias("policy_idx"), F.col("_action").alias("action"))
-        .agg(
-            F.count(F.lit(1)).alias("n_samples"),
-            F.countDistinct("_sk").alias("n_series"),
-        )
+        _report_input(points, policy, now)
+        .groupBy("policy_idx", "action")
+        .agg(*_report_aggregates())
         .orderBy("policy_idx")
     )
+
+
+def retention_report_and_totals(spark, points: DataFrame,
+                                policy: list[PolicyItem], now
+                                ) -> tuple[DataFrame, dict]:
+    """:func:`retention_report` plus the input's totals —
+    ``{"variables": distinct series, "values": samples}`` — from ONE
+    scan and one aggregation: grouping sets ``((policy_idx, action),
+    ())`` give the per-band rows and the grand-total row together, with
+    one series-key evaluation per row. The report comes back as a local
+    frame holding the rows as of this call, so reading it after the
+    input's files are rewritten (or deleted) never re-scans them."""
+    agg = (
+        _report_input(points, policy, now)
+        .groupingSets([["policy_idx", "action"], []], "policy_idx", "action")
+        .agg(*_report_aggregates(), F.grouping_id().alias("_total"))
+    )
+    rows = agg.collect()
+    bands = sorted((r[:-1] for r in rows if not r["_total"]), key=lambda r: r[0])
+    report = local_df(spark, bands, T.StructType(agg.schema.fields[:-1]))
+    # no input rows → no grand-total row either
+    total = next((r for r in rows if r["_total"]), None)
+    totals = {"variables": total["n_series"] if total else 0,
+              "values": total["n_samples"] if total else 0}
+    return report, totals
 
 
 def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
@@ -154,11 +191,11 @@ def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
     import os
     import shutil
 
-    from open_instrument_spark.sources.ingest import write_points
+    from open_instrument_spark.sources.ingest import read_points, write_points
 
     # drop() ignores absent columns, so both the plain dt/bucket layout
     # and the streaming sink's epoch=N/dt/bucket layout normalize here.
-    pts = spark.read.parquet(store_path).drop("dt", "bucket", "epoch")
+    pts = read_points(spark, store_path).drop("dt", "bucket", "epoch")
     tagged = pts.withColumn("_policy", policy_index(pts, policy, now))
     plain_idx = [
         i for i, item in enumerate(policy) if item.keep and not item.mutations
@@ -256,5 +293,5 @@ def run_retention_job(spark, store_path: str, policy: list[PolicyItem], now,
             except ValueError:
                 pass
         dest = os.path.join(store_path, f"epoch={min(epochs, default=0) - 1}")
-    write_points(spark.read.parquet(staging), dest, n_buckets=n_buckets, mode="append")
+    write_points(read_points(spark, staging), dest, n_buckets=n_buckets, mode="append")
     shutil.rmtree(staging, ignore_errors=True)

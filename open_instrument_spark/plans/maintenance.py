@@ -38,7 +38,7 @@ from open_instrument_spark.session import local_df
 
 from open_instrument_spark.operators.retention import (
     PolicyItem,
-    retention_report,
+    retention_report_and_totals,
     run_retention_job,
 )
 
@@ -64,7 +64,7 @@ def compact_dates(spark, store_path: str, n_buckets: int = 16,
     dir removal; on a cluster the same two steps go through the Hadoop
     FileSystem API or a table format's replaceWhere. Returns the
     compacted dates."""
-    from open_instrument_spark.sources.ingest import write_points
+    from open_instrument_spark.sources.ingest import read_points, write_points
 
     limit = n_buckets if max_files_per_date is None else max_files_per_date
     todo = [
@@ -79,7 +79,7 @@ def compact_dates(spark, store_path: str, n_buckets: int = 16,
         return []
     dates = sorted(date for date, _ in todo)
     pts = (
-        spark.read.parquet(store_path)
+        read_points(spark, store_path)
         .filter(F.col("dt").cast("string").isin(dates))
         .drop("dt", "bucket", "name_bucket", "epoch")
     )
@@ -98,7 +98,7 @@ def compact_dates(spark, store_path: str, n_buckets: int = 16,
             except ValueError:
                 pass
         dest = os.path.join(store_path, f"epoch={min(epochs, default=0) - 1}")
-    write_points(spark.read.parquet(staging), dest, n_buckets=n_buckets,
+    write_points(read_points(spark, staging), dest, n_buckets=n_buckets,
                  mode="append")
     shutil.rmtree(staging, ignore_errors=True)
     return dates
@@ -712,7 +712,9 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
     mirrors the runner's closing LOG(INFO) counters
     (store_file_manager.cc:170-171: variables and values examined)
     plus what the tick did (``applied``, ``compacted_dates``, and per-
-    index ``ann`` skew/rebalance outcomes).
+    index ``ann`` skew/rebalance outcomes). The report and the
+    ``variables``/``values`` counters come from ONE scan of the store
+    (:func:`~open_instrument_spark.operators.retention.retention_report_and_totals`).
 
     ``ann_indexes`` (judge r9 "Next round" #6) folds ANN index upkeep
     into the SAME idempotent cadence that owns retention and
@@ -754,19 +756,14 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
     no delete, store bytes untouched — ANN indexes only get their skew
     measured and reported, MinHash stores their epoch count; forget
     sets are NOT applied."""
-    pts = spark.read.parquet(store_path).drop(
+    from open_instrument_spark.sources.ingest import read_points
+
+    pts = read_points(spark, store_path).drop(
         "dt", "bucket", "name_bucket", "epoch"
     )
-    report = retention_report(pts, policy, now)
-    from open_instrument_spark.model import series_key
-
-    counts = pts.select(
-        F.countDistinct(series_key()).alias("variables"),
-        F.count(F.lit(1)).alias("values"),
-    ).first()
+    report, totals = retention_report_and_totals(spark, pts, policy, now)
     summary = {
-        "variables": counts["variables"],
-        "values": counts["values"],
+        **totals,
         "applied": not dry_run,
         "compacted_dates": [],
         "ann": {},
@@ -817,10 +814,6 @@ def maintenance_tick(spark, store_path: str, policy: list[PolicyItem],
                 "compacted": False, "swapped": False, "recovered": False,
             }
         return report, summary
-    # the caller reads the report AFTER the rewrite — materialize it
-    # now so the returned frame reflects tick-START state, not a lazy
-    # re-scan of rewritten (or deleted) files
-    report = local_df(spark, report.collect(), report.schema)
     run_retention_job(spark, store_path, policy, now, n_buckets=n_buckets)
     summary["compacted_dates"] = compact_dates(
         spark, store_path, n_buckets=n_buckets,

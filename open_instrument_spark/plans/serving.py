@@ -13,6 +13,18 @@ mutations → aggregation), ``operators.select.list_series``,
 ``sources.ingest.ingest_batch``. Nothing semantic lives here — a wrong
 answer from this module is a wrong answer from the engine.
 
+An /add body becomes one typed Arrow batch (``model.POINTS_SCHEMA``,
+UTC microsecond timestamps), runs the ingest pipeline ONCE, and the
+validated, deduped result comes back to the driver as Arrow: the sink
+gets a frame over that local batch and ``accepted`` is its row count,
+so counting never re-runs the pipeline. The body limit
+(``MAX_BODY_BYTES``) bounds the batch.
+
+Timestamps cross this edge as epoch milliseconds and mean the same
+instant on any host time zone: request instants become aware UTC
+datetimes, and collected (host-local, naive) values are converted back
+through the host zone.
+
 Responses COLLECT to the driver by design: a Get response is
 post-mutation/post-aggregation and bounded by max_variables/max_values
 (the reference handler also materializes the full GetResponse in
@@ -31,15 +43,21 @@ import datetime as dt
 import json
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import DataFrame, Row
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from open_instrument_spark.model import POINTS_SCHEMA
 from open_instrument_spark.plans.api import GetRequest, get as api_get
-from open_instrument_spark.session import local_df
 from open_instrument_spark.operators.select import list_series
 from open_instrument_spark.sources.ingest import ingest_batch
 
-POINTS_SCHEMA = ("name string, labels map<string,string>, ts timestamp, "
-                 "dval double, sval string")
+# The /add batch's Arrow schema. Every field is nullable, as in the
+# store's parquet files: a null name is outside input that validation
+# rejects, and a non-nullable Spark column would let Catalyst skip that
+# null check.
+_ADD_BATCH_SCHEMA = pa.schema(
+    [f.with_nullable(True) for f in to_arrow_schema(POINTS_SCHEMA)])
 
 # proto SampleType (lib/openinstrument.proto:24-52) → operator kind.
 # AVERAGE follows the C++ query path (UniformTimeSeries interpolation,
@@ -62,12 +80,16 @@ _AGG_TYPE = {"AVERAGE", "MAX", "MIN", "MEDIAN", "SUM"}
 
 
 def _ts(ms) -> dt.datetime:
-    return dt.datetime.fromtimestamp(ms / 1000.0, tz=dt.timezone.utc
-                                     ).replace(tzinfo=None)
+    """Request epoch milliseconds → an aware UTC datetime (the same
+    instant on any host time zone)."""
+    return dt.datetime.fromtimestamp(ms / 1000.0, tz=dt.timezone.utc)
 
 
 def _ms(ts) -> int:
-    return int(ts.replace(tzinfo=dt.timezone.utc).timestamp() * 1000)
+    """A collected timestamp → epoch milliseconds. ``collect()`` returns
+    naive datetimes in the host's local zone; ``astimezone`` reads them
+    as such."""
+    return int(ts.astimezone(dt.timezone.utc).timestamp() * 1000)
 
 
 def _variable_str(var) -> str:
@@ -206,33 +228,33 @@ def list_json(points: DataFrame, obj: dict) -> dict:
 
 def points_from_add_json(spark, obj: dict) -> DataFrame:
     """AddRequest.stream[] (proto:100-105 shape) → a points DataFrame
-    for the S1 ingest pipeline."""
-    rows = []
+    for the S1 ingest pipeline, built from one typed Arrow batch (a
+    local relation: no Python worker runs when it executes)."""
+    cols: dict[str, list] = {f.name: [] for f in _ADD_BATCH_SCHEMA}
     for s in obj.get("stream", []):
         var = s["variable"]
         name = var["name"] if isinstance(var, dict) else var
         labels = (var.get("label") or {}) if isinstance(var, dict) else {}
         for v in s.get("value", []):
-            rows.append(Row(
-                name=name, labels=dict(labels),
-                ts=_ts(v["timestamp"]),
-                dval=(float(v["double_value"])
-                      if v.get("double_value") is not None else None),
-                sval=v.get("string_value"),
-            ))
-    return local_df(spark, rows, POINTS_SCHEMA)
+            cols["name"].append(name)
+            cols["labels"].append(labels)
+            cols["ts"].append(_ts(v["timestamp"]))
+            cols["dval"].append(float(v["double_value"])
+                                if v.get("double_value") is not None else None)
+            cols["sval"].append(v.get("string_value"))
+    return spark.createDataFrame(pa.table(cols, schema=_ADD_BATCH_SCHEMA))
 
 
 def add_json(spark, obj: dict, sink, source_host: str | None = None) -> dict:
     """POST /add: run the S1 pipeline (hostname defaulting → validation
-    → dedup, sources/ingest.py) and hand the surviving points to
-    ``sink`` (a callable taking the DataFrame — e.g. write_points or a
-    streaming-side landing)."""
-    pts = ingest_batch(points_from_add_json(spark, obj),
-                       source_host=source_host)
-    n = pts.count()
-    sink(pts)
-    return {"success": True, "accepted": n}
+    → dedup, sources/ingest.py) exactly once, collecting its output as
+    an Arrow batch, and hand ``sink`` (a callable taking the DataFrame —
+    e.g. write_points or a streaming-side landing) a frame over that
+    batch. ``accepted`` is the number of rows handed to the sink."""
+    batch = ingest_batch(points_from_add_json(spark, obj),
+                         source_host=source_host).toArrow()
+    sink(spark.createDataFrame(batch))
+    return {"success": True, "accepted": batch.num_rows}
 
 
 # Request bodies past this are refused with 413 before any read — a

@@ -58,13 +58,18 @@ def _disable_dataframe_debugging(spark: SparkSession) -> None:
     so a session that ran any DataFrame op before ``prepare()`` (the
     verify driver's) would keep paying the per-call overhead even after
     the conf is set. The conf is set for transparency and the cache is
-    pinned False to cover the already-populated case."""
+    pinned False to cover the already-populated case. The two steps are
+    independent: the conf is static in pyspark 4.1, so setting it on a
+    running session raises, and that must not skip the pin."""
     try:
         spark.conf.set("spark.python.sql.dataFrameDebugging.enabled", "false")
+    except Exception:
+        pass
+    try:
         from pyspark.errors import utils as _errutils
 
         _errutils._enable_debugging_cache = False
-    except Exception:
+    except ImportError:
         pass
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from open_instrument_spark.model import drop_staged_columns, series_key
+from open_instrument_spark.model import POINTS_SCHEMA, drop_staged_columns, series_key
 
 NAME_RE = r"^/\S+$"  # starts with /, no whitespace, len>=2 (store.cc:414-417)
 
@@ -228,6 +228,12 @@ def write_points_bucketed(points: DataFrame, table: str, n_buckets: int = 64,
     )
 
 
+def read_points(spark, path: str) -> DataFrame:
+    """Read parquet points files under ``path`` with the declared points
+    schema, plus whatever partition columns the directory names carry."""
+    return spark.read.schema(POINTS_SCHEMA).parquet(path)
+
+
 def read_store(spark, path: str, variable: str | None = None,
                name_buckets: int | None = None) -> DataFrame:
     """Read a write_points store, pruning partitions from the variable
@@ -242,8 +248,13 @@ def read_store(spark, path: str, variable: str | None = None,
     misrouting the filter). Glob names (F2) and label-only patterns
     can't prune a hash bucket; they fall back to a full predicate scan,
     still dt-prunable by time filters.
+
+    The read declares ``POINTS_SCHEMA`` (:func:`read_points`), so no job
+    runs to infer the schema from parquet footers; the partition columns
+    (``dt``, ``bucket``, ``name_bucket``, ``epoch``) are still discovered
+    from the directory names.
     """
-    df = spark.read.parquet(path)
+    df = read_points(spark, path)
     if variable is None:
         return df
     from open_instrument_spark.functions.match import VariableMatcher
@@ -269,7 +280,7 @@ def compact(spark, path: str, n_buckets: int = 16) -> None:
     (the reference's block compaction, datastore.go:687-705, reduced to
     a repartition+rewrite). Also folds away the streaming sink's
     per-epoch partitioning (drop() ignores absent columns)."""
-    df = spark.read.parquet(path)
+    df = read_points(spark, path)
     write_points(
         df.drop("dt", "bucket", "name_bucket", "epoch"),
         path + "_compacted", n_buckets, mode="overwrite",

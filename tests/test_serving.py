@@ -7,6 +7,10 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
+import subprocess
+import sys
+import textwrap
 import urllib.request
 
 import pytest
@@ -133,7 +137,7 @@ def test_parse_get_request_shapes():
         "max_variables": 5, "max_values": 10,
     })
     assert req.variable == "/x"
-    assert req.min_timestamp == dt.datetime(1970, 1, 1)
+    assert req.min_timestamp == dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
     assert req.mutations == [("average", 30_000, 2)]
     assert req.aggregation == "median" and req.aggregation_labels == ["az"]
     assert req.max_variables == 5 and req.max_values == 10
@@ -187,3 +191,95 @@ def test_serving_request_limits_and_malformed_json(spark, pts):
         assert code == 400 and not got["success"]
     finally:
         srv.shutdown()
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_add_json_hands_sink_the_collected_batch(spark):
+    """/add runs the ingest pipeline once: the sink gets a frame over the
+    collected batch (no dedup Window left to re-run), and ``accepted``
+    is that frame's row count."""
+    got: list = []
+    out = serving.add_json(spark, {"stream": [{
+        "variable": {"name": "/sys/cpu", "label": {"host": "c"}},
+        "value": [{"timestamp": MS, "double_value": 7.0},
+                  {"timestamp": MS, "double_value": 7.0},
+                  {"timestamp": MS + 1000, "string_value": "up"}],
+    }, {
+        "variable": "bad name",
+        "value": [{"timestamp": MS, "double_value": 1.0}],
+    }]}, got.append, source_host="10.0.0.1")
+    assert out == {"success": True, "accepted": 2}
+    (sunk,) = got
+    assert "Window" not in _plan(sunk)
+    assert sunk.count() == out["accepted"]
+    rows = sorted((r["name"], dict(r["labels"]), r["ts"], r["dval"], r["sval"])
+                  for r in sunk.collect())
+    labels = {"host": "c", "hostname": "10.0.0.1"}
+    assert rows == [("/sys/cpu", labels, BASE, 7.0, None),
+                    ("/sys/cpu", labels, BASE + dt.timedelta(seconds=1),
+                     None, "up")]
+
+
+@pytest.mark.parametrize("body", [
+    {},
+    {"stream": []},
+    {"stream": [{"variable": {"name": "no-slash"},
+                 "value": [{"timestamp": MS, "double_value": 1.0}]},
+                {"variable": {"name": None},
+                 "value": [{"timestamp": MS, "double_value": 2.0}]}]},
+], ids=["no_streams", "empty_streams", "all_rejected"])
+def test_add_json_accepts_nothing(spark, body):
+    got: list = []
+    assert serving.add_json(spark, body, got.append) == {
+        "success": True, "accepted": 0}
+    assert got[0].count() == 0
+
+
+_TZ_ROUNDTRIP = textwrap.dedent("""
+    import glob, json, sys
+    import pyarrow.parquet as pq
+    from open_instrument_spark.plans import serving
+    from open_instrument_spark.session import get_spark
+    from open_instrument_spark.sources.ingest import read_store, write_points
+
+    ms, store = int(sys.argv[1]), sys.argv[2]
+    spark = get_spark("tz-roundtrip", cpus=1)
+    try:
+        add = serving.add_json(spark, {"stream": [{
+            "variable": {"name": "/tz/probe"},
+            "value": [{"timestamp": ms, "double_value": 1.0}]}]},
+            lambda df: write_points(df, store, n_buckets=1))
+        stored = []
+        for f in glob.glob(store + "/**/*.parquet", recursive=True):
+            ts = pq.read_table(f).column("ts")
+            per_ms = {"ms": 1, "us": 1000, "ns": 1000000}[ts.type.unit]
+            stored += [v // per_ms for v in ts.cast("int64").to_pylist()]
+        got = serving.get_json(read_store(spark, store), {
+            "variable": "/tz/probe", "min_timestamp": ms,
+            "max_timestamp": ms})
+        print(json.dumps({"accepted": add["accepted"], "stored": stored,
+                          "got": [v["timestamp"] for s in got["stream"]
+                                  for v in s["value"]]}))
+    finally:
+        spark.stop()
+""")
+
+
+def test_serving_timestamps_independent_of_host_time_zone(tmp_path):
+    """On a host whose local zone is not UTC, an /add stores the instant
+    it was sent, and a Get over exactly that instant returns it."""
+    ms = 1709251200000
+    env = dict(os.environ, TZ="America/New_York",
+               SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   [os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                    os.environ.get("PYTHONPATH", "")]))
+    proc = subprocess.run(
+        [sys.executable, "-c", _TZ_ROUNDTRIP, str(ms), str(tmp_path / "store")],
+        env=env, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out == {"accepted": 1, "stored": [ms], "got": [ms]}
